@@ -17,8 +17,10 @@ firewall rather than a join in disguise.
 
 Determinism contract: position i of key x is
 ``int(md5('bloom' i ':' x)[:12], 16) % m_bits`` — md5 prefixes parse
-identically in Spark (``conv(_, 16, 10)``) and DuckDB
-(``('0x' || _)::BIGINT``), so build and probe are exact-oracle-checkable
+identically in Spark (``conv(_, 16, 10)``), DuckDB
+(``('0x' || _)::BIGINT``) and Python's ``hashlib`` (``_pos_py``, the
+snapshot manifests' planning-time probe), so build and probe are
+exact-oracle-checkable
 (no false negatives BY CONSTRUCTION is also asserted property-style in
 tests). 48-bit prefixes keep modulo bias ≤ m/2^48.
 
@@ -28,6 +30,8 @@ never-inserted key probes true with probability ≈ (1 - e^{-kn/m})^k
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +53,13 @@ def _pos_sql(key_expr: str, i: int, m_bits: int) -> str:
         f"('0x' || SUBSTR(MD5(CONCAT('bloom', '{i}', ':', {key_expr})), 1, 12))"
         f"::BIGINT % {m_bits}"
     )
+
+
+def _pos_py(key: str, i: int, m_bits: int) -> int:
+    """hashlib twin of :func:`_pos_expr` for a key already rendered as the
+    string Spark's ``concat`` sees — position i with no Spark job."""
+    digest = hashlib.md5(f"bloom{i}:{key}".encode("utf-8")).hexdigest()
+    return int(digest[:12], 16) % m_bits
 
 
 def bloom_build(

@@ -7,10 +7,14 @@ main.py:109-131) + the downstream load's parse, as one in-engine step:
   optionally-signed all-digit string, surrounding whitespace allowed.
   ``int("12.5")`` FAILS (→ NULL); Spark's plain ``try_cast('12.5' AS
   BIGINT)`` would truncate to 12, so we regex-guard (main.py:111-115).
+  A guarded literal outside the INT64 range is NULL (``try_cast``), under
+  ANSI mode or not — one such cell never aborts the load.
 * FLOAT: cell coerces iff Python ``float(cell)`` would succeed. That
   includes scientific notation, ``inf``/``Infinity``/``nan`` in any case
-  with optional sign (main.py:116-120). Spark's string→double cast accepts
-  ``Infinity``/``NaN`` but not ``inf``, so those spellings are special-cased.
+  with optional sign (main.py:116-120). One case-insensitive guard admits
+  exactly those spellings; Spark's ``try_cast`` to double parses all of
+  them (``inf``, ``-INFINITY``, ``+NaN``) except ``-nan``, which the
+  ``coalesce`` maps to NaN.
 * TIMESTAMP: try formats in declared order, first match wins; no match →
   NULL (main.py:121-130). Formats (main.py:30-35, strptime → Spark pattern,
   single-letter fields because strptime accepts non-zero-padded components):
@@ -23,7 +27,7 @@ main.py:109-131) + the downstream load's parse, as one in-engine step:
 * STRING: identity — the reference has no STRING branch, empty string
   stays ``''`` (main.py:109-131, SURVEY.md T5/T6).
 
-Every branch compiles to built-in expressions (``rlike``/``cast``/
+Every branch compiles to built-in expressions (``rlike``/``try_cast``/
 ``try_to_timestamp``/``coalesce``), so coercion stays inside whole-stage
 codegen and scales linearly with executors.
 """
@@ -51,11 +55,8 @@ _WS_CHARS = " \t\r\n\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0"
 # After edge-stripping: optional sign, digits.
 _INT_RE = r"^[+-]?[0-9]+$"
 # After edge-stripping: sign, then decimal/scientific ("1", "1.", ".5",
-# "1e3", "1.2E-4") — inf/nan handled separately.
-_FLOAT_RE = r"^[+-]?(([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?)$"
-_INF_RE = r"(?i)^[+-]?(inf|infinity)$"
-_NEG_INF_RE = r"(?i)^-(inf|infinity)$"
-_NAN_RE = r"(?i)^[+-]?nan$"
+# "1e3", "1.2E-4") or inf/infinity/nan, in any case.
+_FLOAT_RE = r"(?i)^[+-]?(([0-9]+(\.[0-9]*)?|\.[0-9]+)(e[+-]?[0-9]+)?|inf|infinity|nan)$"
 
 # Declared order matters: first matching format wins (main.py:123-129).
 TIMESTAMP_FORMATS = ["yyyy-M-d H:m:s", "yyyy-M-d", "d/M/yyyy", "yyyyMMdd"]
@@ -69,17 +70,15 @@ def _stripped(c: Column) -> Column:
 def safe_int(c: Column) -> Column:
     """NULL unless the cell is an integer literal by Python ``int`` rules."""
     s = _stripped(c)
-    return F.when(s.rlike(_INT_RE), s.cast("long"))
+    return F.when(s.rlike(_INT_RE), s.try_cast("long"))
 
 
 def safe_float(c: Column) -> Column:
     """NULL unless the cell is a float literal by Python ``float`` rules."""
     s = _stripped(c)
-    return (
-        F.when(s.rlike(_NEG_INF_RE), F.lit(float("-inf")))
-        .when(s.rlike(_INF_RE), F.lit(float("inf")))
-        .when(s.rlike(_NAN_RE), F.lit(float("nan")))
-        .when(s.rlike(_FLOAT_RE), s.cast("double"))
+    return F.when(
+        s.rlike(_FLOAT_RE),
+        F.coalesce(s.try_cast("double"), F.lit(float("nan"))),
     )
 
 

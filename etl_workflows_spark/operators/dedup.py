@@ -554,6 +554,8 @@ def simhash_fingerprints(
 ) -> DataFrame:
     from etl_workflows_spark.operators.parallelism import widen
 
+    if not 1 <= bits <= 62:
+        raise ValueError(f"bits must be in [1, 62], got {bits}")
     # Arrow kernel, not the in-plan fold: md5-exact twin, ~vectorized
     # per-task work (see _simhash_kernel_udf); a compact single-split
     # corpus must not compute it serially, hence widen

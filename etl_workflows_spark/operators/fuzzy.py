@@ -77,6 +77,11 @@ def _variants_py(s: str, max_dist: int) -> list:
 def _keyed(df: DataFrame, id_col: str, str_col: str, max_dist: int) -> DataFrame:
     from pyspark.sql import types as T
 
+    if max_dist not in (1, 2):
+        # _variants_py only branches on max_dist == 2: any other value
+        # would silently generate distance-1 keys and miss pairs
+        raise ValueError(f"max_dist must be 1 or 2, got {max_dist}")
+
     from etl_workflows_spark.operators.parallelism import widen
 
     renamed = widen(df).select(

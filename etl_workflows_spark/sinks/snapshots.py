@@ -23,6 +23,21 @@ never O(rows). Data still moves through executor-parallel
 ``DataFrameWriter``; the driver renames finished part-files (a pure
 metadata op on HDFS-class stores) and writes one small JSON.
 
+Every write (commit, WAP stage, MERGE/DELETE rewrite) lands its files
+through one helper, ``_land``: executor write → footer [min, max] stats →
+per-file Bloom entries. Every next manifest comes from one rule,
+``_next_manifest``: the files kept from a base manifest (the parent's
+for append, none for overwrite, the survivors for MERGE/DELETE, the
+source version's for rollback) with their stats and Blooms carried
+forward, plus the landed files. Kept files are read under the new
+schema, so the rule refuses any schema that drops or retypes one of the
+base's columns.
+
+Bloom entries use operators/bloom.py's md5-prefix positions: the build
+runs its Spark expression, the planning-time probe its ``hashlib`` twin.
+Each entry records its ``scheme``; an entry without one is never used to
+skip a file.
+
 ``commit_key`` gives exactly-once sinks: a retried commit carrying the
 same key is recognized and returns the already-published version — the
 snapshot twin of sinks/writer.py ``append_if_absent`` and the natural
@@ -41,11 +56,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from etl_workflows_spark.operators.bloom import _pos_expr, _pos_py
 from etl_workflows_spark.operators.cache import SCRATCH_LEVEL
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
 _MAX_COMMIT_RETRIES = 20
+_BLOOM_SCHEME = "md5"
+_BLOOM_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+_BLOOM_TYPES = (*_BLOOM_INT_TYPES, "string")
 
 
 def _snap_path(table_dir: str, version: int) -> str:
@@ -94,6 +113,11 @@ def _load_manifest(table_dir: str, version: int) -> dict:
 def _latest(table_dir: str) -> int | None:
     vs = versions(table_dir)
     return vs[-1] if vs else None
+
+
+def _head(table_dir: str) -> dict | None:
+    v = _latest(table_dir)
+    return _load_manifest(table_dir, v) if v is not None else None
 
 
 def _write_data_files(df: DataFrame, table_dir: str) -> list[str]:
@@ -160,6 +184,68 @@ def _file_stats(
     return out
 
 
+def _land(
+    df: DataFrame,
+    table_dir: str,
+    stat_cols: list[str] | None,
+    bloom_conf: dict[str, dict],
+) -> tuple[list[str], dict, dict]:
+    """The one way data files enter a table: executor write → footer
+    stats for ``stat_cols`` → Bloom entries under ``bloom_conf``.
+    Returns ``(files, stats, blooms)``, the shape ``_next_manifest``
+    takes and ``_publish``'s callback returns."""
+    files = _write_data_files(df, table_dir)
+    stats = _file_stats(table_dir, files, stat_cols) if stat_cols else {}
+    blooms = _build_blooms(df.sparkSession, table_dir, files, bloom_conf)
+    return files, stats, blooms
+
+
+def _check_schema_keeps(base_schema: str, schema_json: str) -> None:
+    """The next manifest's schema is applied to EVERY file at read time,
+    so while the base's files stay it may only ADD nullable columns — a
+    renamed/retyped/dropped base column would silently null out or break
+    old data."""
+    if base_schema == schema_json:
+        return
+    base_fields = {
+        f["name"]: f["type"] for f in json.loads(base_schema)["fields"]
+    }
+    new_fields = {
+        f["name"]: f["type"] for f in json.loads(schema_json)["fields"]
+    }
+    for name, btype in base_fields.items():
+        if name not in new_fields:
+            raise ValueError(
+                f"append drops column {name!r} — appends may only "
+                "add columns (use mode='overwrite' to reshape)"
+            )
+        if new_fields[name] != btype:
+            raise ValueError(
+                f"append changes column {name!r} type "
+                f"{btype!r} -> {new_fields[name]!r} — appends may "
+                "only add columns (use mode='overwrite' to reshape)"
+            )
+
+
+def _next_manifest(
+    base: dict | None, kept: list[str], landed: tuple, schema_json: str
+) -> tuple[list[str], dict, dict]:
+    """The one rule for a next manifest's ``(files, stats, blooms)``:
+    the ``kept`` files of ``base`` — the parent's for append, none for
+    overwrite, the survivors for MERGE/DELETE, the source version's for
+    rollback — with their stats and Blooms carried forward, then the
+    ``landed`` ones. Kept files are read under ``schema_json`` from now
+    on, so it may only add columns to the base's schema."""
+    files, stats, blooms = landed
+    if not kept:
+        return files, stats, blooms
+    _check_schema_keeps(base["schema"], schema_json)
+    keep = set(kept)
+    stats = {r: s for r, s in base.get("stats", {}).items() if r in keep} | stats
+    blooms = {r: b for r, b in base.get("blooms", {}).items() if r in keep} | blooms
+    return kept + files, stats, blooms
+
+
 def _publish(
     table_dir: str,
     op: str,
@@ -168,9 +254,9 @@ def _publish(
     commit_key: str | None = None,
 ) -> int:
     """Atomically publish a manifest; ``files_fn(parent_manifest|None)``
-    returns the file list — or ``(files, stats[, blooms])`` — computed
-    AGAINST THE CURRENT PARENT so a lost race recomputes on the winner's
-    state instead of silently dropping it."""
+    returns its ``(files, stats, blooms)`` computed AGAINST THE CURRENT
+    PARENT so a lost race recomputes on the winner's state instead of
+    silently dropping it."""
     os.makedirs(os.path.join(table_dir, _SNAP_DIR), exist_ok=True)
     for _ in range(_MAX_COMMIT_RETRIES):
         parent = _latest(table_dir)
@@ -180,11 +266,7 @@ def _publish(
             if existing is not None:
                 return existing
         parent_m = _load_manifest(table_dir, parent) if parent is not None else None
-        built = files_fn(parent_m)
-        if not isinstance(built, tuple):
-            built = (built,)
-        built = built + ({},) * (3 - len(built))
-        files, stats, blooms = built
+        files, stats, blooms = files_fn(parent_m)
         manifest = {
             "version": (parent + 1) if parent is not None else 1,
             "parent": parent,
@@ -211,6 +293,24 @@ def _publish(
     )
 
 
+def _publish_landed(
+    table_dir: str,
+    mode: str,
+    op: str,
+    schema_json: str,
+    landed: tuple,
+    commit_key: str | None,
+) -> int:
+    """Publish landed files onto whatever head the publish finds:
+    ``mode='append'`` keeps the head's files, ``'overwrite'`` none."""
+
+    def files_fn(parent_m):
+        kept = parent_m["files"] if mode == "append" and parent_m else []
+        return _next_manifest(parent_m, kept, landed, schema_json)
+
+    return _publish(table_dir, op, schema_json, files_fn, commit_key)
+
+
 def _build_blooms(
     spark: SparkSession,
     table_dir: str,
@@ -219,10 +319,11 @@ def _build_blooms(
 ) -> dict[str, dict[str, dict]]:
     """Per-file Bloom position sets for ``conf = {col: {m, k}}`` — built
     EXECUTOR-SIDE (one column-pruned scan of the new files per column,
-    map-side collect_set of ``pmod(xxhash64(value, seed), m)``), so the
-    driver only ever sees ≤ m small ints per (file, column). The
-    manifest-level twin of parquet's row-group bloom filters: this one
-    skips WHOLE FILES at planning time, before any scan is launched."""
+    map-side collect_set of operators/bloom.py's md5-prefix positions of
+    the value cast to string), so the driver only ever sees ≤ m small
+    ints per (file, column). The manifest-level twin of parquet's
+    row-group bloom filters: this one skips WHOLE FILES at planning
+    time, before any scan is launched."""
     if not conf or not rel_paths:
         return {}
     from pyspark.sql import functions as F
@@ -231,34 +332,18 @@ def _build_blooms(
     df = spark.read.parquet(
         *[os.path.join(table_dir, p) for p in rel_paths]
     ).select(F.input_file_name().alias("__f"), *conf.keys())
-    # canonicalize hashable types: integral columns are widened to
-    # bigint so the build hash is Spark's 8-byte long fold — the SAME
-    # fold the driver-side probe replays (IntegerType columns would
-    # otherwise hash through the 4-byte path and never match a probe)
+    # the probe renders a literal the way cast-to-string renders these
+    # types; any other type would not round-trip exactly
     for c, dtype in df.dtypes:
-        if c == "__f":
-            continue
-        if dtype in ("tinyint", "smallint", "int", "bigint"):
-            df = df.withColumn(c, F.col(c).cast("bigint"))
-        elif dtype != "string":
+        if c != "__f" and dtype not in _BLOOM_TYPES:
             raise ValueError(
                 f"bloom_cols supports integral/string columns; {c} is {dtype}"
             )
     out: dict[str, dict[str, dict]] = {p: {} for p in rel_paths}
     for col, mk in conf.items():
         m, k = int(mk["m"]), int(mk["k"])
-        # seed literal cast to bigint: Spark folds IntegerType literals
-        # as 4-byte hashes — the driver-side probe replays the 8-byte
-        # long fold, so the build must hash the seed as a long too
-        positions = F.array(
-            *[
-                F.pmod(
-                    F.xxhash64(F.col(col), F.lit(seed).cast("bigint")),
-                    F.lit(m),
-                )
-                for seed in range(k)
-            ]
-        )
+        key = "cast(`{}` as string)".format(col.replace("`", "``"))
+        positions = F.array(*[F.expr(_pos_expr(key, i, m)) for i in range(k)])
         rows = (
             df.select("__f", F.explode(positions).alias("p"))
             .groupBy("__f")
@@ -269,6 +354,7 @@ def _build_blooms(
             base = os.path.basename(r["__f"])
             if base in paths:
                 out[paths[base]][col] = {
+                    "scheme": _BLOOM_SCHEME,
                     "m": m,
                     "k": k,
                     "bits": [int(x) for x in r["bits"]],
@@ -276,112 +362,35 @@ def _build_blooms(
     return out
 
 
-def _bloom_conf_of(manifest: dict) -> dict[str, dict]:
-    """Recover {col: {m, k}} from any per-file bloom entry (uniform by
-    construction) — lets rewriting ops rebuild blooms for new files."""
-    for per_file in manifest.get("blooms", {}).values():
+def _bloom_conf_of(manifest: dict | None, df: DataFrame) -> dict[str, dict]:
+    """The {col: {m, k}} a manifest's newest Bloom entry was built under,
+    for the columns ``df`` still has in a bloomable type — how writes
+    that name no ``bloom_cols`` keep a Bloom-indexed table indexed."""
+    for per_file in reversed((manifest or {}).get("blooms", {}).values()):
         if per_file:
-            return {c: {"m": b["m"], "k": b["k"]} for c, b in per_file.items()}
+            types = dict(df.dtypes)
+            return {
+                c: {"m": b["m"], "k": b["k"]}
+                for c, b in per_file.items()
+                if types.get(c) in _BLOOM_TYPES
+            }
     return {}
 
 
-_XXP1 = 0x9E3779B185EBCA87
-_XXP2 = 0xC2B2AE3D27D4EB4F
-_XXP3 = 0x165667B19E3779F9
-_XXP4 = 0x85EBCA77C2B2AE63
-_XXP5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxh64(data: bytes, seed: int) -> int:
-    """XXH64 (Collet's public spec) in pure Python — bit-identical to
-    Spark's ``xxhash64`` so Bloom probes need NO Spark job: build hashes
-    executor-side, probe hashes driver-side, parity pinned in tests."""
-    n, i = len(data), 0
-    if n >= 32:
-        v1 = (seed + _XXP1 + _XXP2) & _M64
-        v2 = (seed + _XXP2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XXP1) & _M64
-        while i <= n - 32:
-            v1 = (
-                _rotl((v1 + int.from_bytes(data[i : i + 8], "little") * _XXP2) & _M64, 31)
-                * _XXP1
-            ) & _M64
-            v2 = (
-                _rotl((v2 + int.from_bytes(data[i + 8 : i + 16], "little") * _XXP2) & _M64, 31)
-                * _XXP1
-            ) & _M64
-            v3 = (
-                _rotl((v3 + int.from_bytes(data[i + 16 : i + 24], "little") * _XXP2) & _M64, 31)
-                * _XXP1
-            ) & _M64
-            v4 = (
-                _rotl((v4 + int.from_bytes(data[i + 24 : i + 32], "little") * _XXP2) & _M64, 31)
-                * _XXP1
-            ) & _M64
-            i += 32
-        h = (
-            _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
-        ) & _M64
-        for v in (v1, v2, v3, v4):
-            h ^= (_rotl((v * _XXP2) & _M64, 31) * _XXP1) & _M64
-            h = ((h * _XXP1) + _XXP4) & _M64
-    else:
-        h = (seed + _XXP5) & _M64
-    h = (h + n) & _M64
-    while i <= n - 8:
-        k1 = (
-            _rotl((int.from_bytes(data[i : i + 8], "little") * _XXP2) & _M64, 31)
-            * _XXP1
-        ) & _M64
-        h = ((_rotl(h ^ k1, 27) * _XXP1) + _XXP4) & _M64
-        i += 8
-    if i <= n - 4:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXP1) & _M64
-        h = ((_rotl(h, 23) * _XXP2) + _XXP3) & _M64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _XXP5) & _M64
-        h = (_rotl(h, 11) * _XXP1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _XXP2) & _M64
-    h ^= h >> 29
-    h = (h * _XXP3) & _M64
-    h ^= h >> 32
-    return h
-
-
-def _spark_xxhash64(value, seed_col: int) -> int:
-    """Replicates ``F.xxhash64(F.lit(value), F.lit(seed_col))``: Spark
-    folds columns left to right with the running hash as the seed
-    (initial 42), longs as 8 LE bytes, strings as UTF-8 bytes. Returns
-    the SIGNED 64-bit value Spark produces."""
-    if isinstance(value, bool):
-        raise TypeError("bloom columns must be long or string")
-    if isinstance(value, int):
-        h = _xxh64(value.to_bytes(8, "little", signed=True), 42)
-    elif isinstance(value, str):
-        h = _xxh64(value.encode("utf-8"), 42)
-    else:
-        raise TypeError(
-            f"bloom probe supports long/string values, got {type(value)}"
-        )
-    h = _xxh64(int(seed_col).to_bytes(8, "little", signed=True), h)
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def _bloom_positions(spark: SparkSession, value, conf: dict) -> list[int]:
-    """The k positions of a literal under the SAME hash as the executor-
-    side build — computed driver-side with the pure-Python XXH64 (no
-    Spark job per probe; parity with ``F.xxhash64`` pinned in tests)."""
-    m, k = int(conf["m"]), int(conf["k"])
-    return [_spark_xxhash64(value, seed) % m for seed in range(k)]
+def _bloom_key(value, dtype: str) -> str | None:
+    """``value`` as the build's ``cast(col as string)`` renders it, or
+    None when equality on a ``dtype`` column is not a plain match of that
+    rendering (a cross-type comparison casts) — such a probe skips
+    nothing."""
+    if dtype == "string" and isinstance(value, str):
+        return value
+    if (
+        dtype in _BLOOM_INT_TYPES
+        and isinstance(value, int)
+        and not isinstance(value, bool)
+    ):
+        return str(value)
+    return None
 
 
 def commit(
@@ -408,7 +417,8 @@ def commit(
     skips. ``bloom_cols``: additionally record a per-file Bloom position
     set (m=``bloom_bits``, k=``bloom_hashes``) for planning-time file
     skipping on EQUALITY predicates over high-cardinality, unordered
-    columns — where min/max ranges can't exclude anything.
+    columns — where min/max ranges can't exclude anything. Without
+    ``bloom_cols`` the new files are indexed under the head's Bloom conf.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -416,47 +426,14 @@ def commit(
         existing = _find_commit_key(table_dir, commit_key)
         if existing is not None:
             return existing
-    new_files = _write_data_files(df, table_dir)
-    new_stats = _file_stats(table_dir, new_files, stat_cols) if stat_cols else {}
-    bconf = {
-        c: {"m": bloom_bits, "k": bloom_hashes} for c in (bloom_cols or [])
-    }
-    new_blooms = _build_blooms(df.sparkSession, table_dir, new_files, bconf)
-
-    def files_fn(parent_m):
-        if mode == "append" and parent_m is not None:
-            # evolution guard: the append's schema becomes the table's
-            # and is applied to EVERY file at read time, so it may only
-            # ADD nullable columns — a renamed/retyped/dropped parent
-            # column would silently null out or break old data
-            parent_fields = {
-                f["name"]: f["type"]
-                for f in json.loads(parent_m["schema"])["fields"]
-            }
-            new_fields = {
-                f["name"]: f["type"]
-                for f in json.loads(df.schema.json())["fields"]
-            }
-            for pname, ptype in parent_fields.items():
-                if pname not in new_fields:
-                    raise ValueError(
-                        f"append drops column {pname!r} — appends may only "
-                        "add columns (use mode='overwrite' to reshape)"
-                    )
-                if new_fields[pname] != ptype:
-                    raise ValueError(
-                        f"append changes column {pname!r} type "
-                        f"{ptype!r} -> {new_fields[pname]!r} — appends may "
-                        "only add columns (use mode='overwrite' to reshape)"
-                    )
-            stats = dict(parent_m.get("stats", {}))
-            stats.update(new_stats)
-            blooms = dict(parent_m.get("blooms", {}))
-            blooms.update(new_blooms)
-            return parent_m["files"] + new_files, stats, blooms
-        return list(new_files), dict(new_stats), dict(new_blooms)
-
-    return _publish(table_dir, mode, df.schema.json(), files_fn, commit_key)
+    if bloom_cols is None:
+        bconf = _bloom_conf_of(_head(table_dir), df)
+    else:
+        bconf = {c: {"m": bloom_bits, "k": bloom_hashes} for c in bloom_cols}
+    landed = _land(df, table_dir, stat_cols, bconf)
+    return _publish_landed(
+        table_dir, mode, mode, df.schema.json(), landed, commit_key
+    )
 
 
 def read_snapshot(
@@ -509,20 +486,24 @@ def read_snapshot(
         files = [f for f in files if survives(f)]
     if equals:
         blooms = m.get("blooms", {})
+        types = {f.name: f.dataType.simpleString() for f in schema.fields}
+        keys = {c: _bloom_key(val, types.get(c, "")) for c, val in equals.items()}
         # positions are computed PER (column, m, k): files bloomed under
         # different geometries (bloom_bits changed between appends) each
         # get probes under their own modulus — never another file's
         pos: dict[tuple, set[int]] = {}
 
         def survives_bloom(rel: str) -> bool:
-            for c, val in equals.items():
+            for c, key in keys.items():
                 b = blooms.get(rel, {}).get(c)
-                if b is None:
+                # an entry of no recorded scheme (older manifests) or
+                # another one cannot be probed: it never skips the file
+                if key is None or b is None or b.get("scheme") != _BLOOM_SCHEME:
                     continue
-                key = (c, b["m"], b["k"])
-                if key not in pos:
-                    pos[key] = set(_bloom_positions(spark, val, b))
-                if not pos[key] <= set(b["bits"]):
+                g = (c, b["m"], b["k"])
+                if g not in pos:
+                    pos[g] = {_pos_py(key, i, b["m"]) for i in range(b["k"])}
+                if not pos[g] <= set(b["bits"]):
                     return False
             return True
 
@@ -625,10 +606,8 @@ def rollback(table_dir: str, version: int) -> int:
         table_dir,
         f"rollback_to_{version}",
         src["schema"],
-        lambda parent_m: (
-            src["files"],
-            src.get("stats", {}),
-            src.get("blooms", {}),
+        lambda parent_m: _next_manifest(
+            src, src["files"], ([], {}, {}), src["schema"]
         ),
     )
 
@@ -726,20 +705,21 @@ def _prune_by_key_range(
     return affected, kept
 
 
-def _rewrite_files_fn(
+def _publish_rewrite(
     table_dir: str,
     m: dict,
     op: str,
     kept: list[str],
-    new_files: list[str],
-    new_stats: dict,
-    new_blooms: dict,
-):
-    """files_fn for a keyed rewrite (MERGE/DELETE): carries the kept
-    files' stats/blooms forward, appends the rewrite's, and aborts if
-    the head moved since planning (a concurrent writer's files must not
-    be silently dropped)."""
-    kept_set = set(kept)
+    rewritten: DataFrame,
+    prune_col: str,
+    commit_key: str | None,
+) -> int:
+    """Land a keyed rewrite (MERGE/DELETE) and publish it as ``m``'s
+    ``kept`` files plus the landed ones. Aborts if the head moved since
+    planning (a concurrent writer's files must not be silently dropped)."""
+    landed = _land(
+        rewritten, table_dir, [prune_col], _bloom_conf_of(m, rewritten)
+    )
 
     def files_fn(parent_m):
         if parent_m is not None and parent_m["version"] != m["version"]:
@@ -747,19 +727,9 @@ def _rewrite_files_fn(
                 f"concurrent write to {table_dir}: {op} planned against "
                 f"v{m['version']} but head is v{parent_m['version']} — rerun"
             )
-        stats_out = {
-            rel: s for rel, s in m.get("stats", {}).items() if rel in kept_set
-        }
-        stats_out.update(new_stats)
-        blooms_out = {
-            rel: b
-            for rel, b in m.get("blooms", {}).items()
-            if rel in kept_set
-        }
-        blooms_out.update(new_blooms)
-        return kept + new_files, stats_out, blooms_out
+        return _next_manifest(m, kept, landed, m["schema"])
 
-    return files_fn
+    return _publish(table_dir, op.lower(), m["schema"], files_fn, commit_key)
 
 
 def _reject_null_keys(keys: DataFrame, key_cols: list[str], op: str) -> None:
@@ -810,8 +780,8 @@ def merge_into_snapshot(
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    head = _latest(table_dir)
-    if head is None:
+    m = _head(table_dir)
+    if m is None:
         v = commit(source, table_dir, mode="append", commit_key=commit_key,
                    stat_cols=[key_cols[0]])
         return {
@@ -821,7 +791,6 @@ def merge_into_snapshot(
             "files_rewritten": 0,
             "files_total": len(_load_manifest(table_dir, v)["files"]),
         }
-    m = _load_manifest(table_dir, head)
     target_cols = [
         f["name"] for f in json.loads(m["schema"])["fields"]
     ]
@@ -865,15 +834,9 @@ def merge_into_snapshot(
     else:
         matched = 0
         rewritten = src
-    new_files = _write_data_files(rewritten, table_dir)
-    new_stats = _file_stats(table_dir, new_files, [prune_col])
-    new_blooms = _build_blooms(
-        spark, table_dir, new_files, _bloom_conf_of(m)
+    v = _publish_rewrite(
+        table_dir, m, "MERGE", kept, rewritten, prune_col, commit_key
     )
-    files_fn = _rewrite_files_fn(
-        table_dir, m, "MERGE", kept, new_files, new_stats, new_blooms
-    )
-    v = _publish(table_dir, "merge", m["schema"], files_fn, commit_key)
     return {
         "version": v,
         "matched": matched,
@@ -902,10 +865,9 @@ def delete_from_snapshot(
 
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    head = _latest(table_dir)
-    if head is None:
+    m = _head(table_dir)
+    if m is None:
         raise ValueError(f"{table_dir} has no snapshots")
-    m = _load_manifest(table_dir, head)
     if commit_key is not None:
         existing = _find_commit_key(table_dir, commit_key)
         if existing is not None:
@@ -918,7 +880,7 @@ def delete_from_snapshot(
     intervals = _source_prune_intervals(keys, prune_col)
     affected, kept = _prune_by_key_range(m, prune_col, intervals)
     if not affected:
-        return {"version": head, "deleted": 0, "files_rewritten": 0,
+        return {"version": m["version"], "deleted": 0, "files_rewritten": 0,
                 "files_total": len(m["files"])}
     schema = T.StructType.fromJson(json.loads(m["schema"]))
     hit = spark.read.schema(schema).parquet(
@@ -927,16 +889,9 @@ def delete_from_snapshot(
     jk = F.broadcast(keys) if n_keys <= _BROADCAST_MAX_KEYS else keys
     doomed = hit.join(jk, key_cols, "leftsemi").count()
     survivors = hit.join(jk, key_cols, "leftanti")
-    new_files = _write_data_files(survivors, table_dir)
-    new_stats = _file_stats(table_dir, new_files, [prune_col])
-    new_blooms = _build_blooms(
-        spark, table_dir, new_files, _bloom_conf_of(m)
+    v = _publish_rewrite(
+        table_dir, m, "DELETE", kept, survivors, prune_col, commit_key
     )
-    files_fn = _rewrite_files_fn(
-        table_dir, m, "DELETE", kept, new_files, new_stats, new_blooms
-    )
-
-    v = _publish(table_dir, "delete", m["schema"], files_fn, commit_key)
     return {
         "version": v,
         "deleted": doomed,
@@ -952,11 +907,12 @@ def compact_snapshot(
     Small-file pathology is the #1 silent killer of 100 TB scans (one
     task + one open() per file); compaction here is just read-latest →
     repartition → commit(overwrite) — readers on old versions are
-    untouched, vacuum reclaims the small files later."""
-    head = _latest(table_dir)
-    if head is None:
+    untouched, vacuum reclaims the small files later. The compacted
+    files keep the head's stat columns and (by ``commit``'s default)
+    its Bloom conf."""
+    m = _head(table_dir)
+    if m is None:
         raise ValueError(f"{table_dir} has no snapshots")
-    m = _load_manifest(table_dir, head)
     total = sum(
         os.path.getsize(os.path.join(table_dir, f)) for f in m["files"]
     )
@@ -965,17 +921,7 @@ def compact_snapshot(
     stat_cols = sorted(
         {c for s in m.get("stats", {}).values() for c in s}
     ) or None
-    bconf = _bloom_conf_of(m)
-    first = next(iter(bconf.values()), {"m": 1024, "k": 3})
-    v = commit(
-        df,
-        table_dir,
-        mode="overwrite",
-        stat_cols=stat_cols,
-        bloom_cols=sorted(bconf) or None,
-        bloom_bits=int(first["m"]),
-        bloom_hashes=int(first["k"]),
-    )
+    v = commit(df, table_dir, mode="overwrite", stat_cols=stat_cols)
     return {
         "version": v,
         "files_before": len(m["files"]),
@@ -1006,21 +952,23 @@ def stage(
     either publishes or drops; a dropped batch never existed as far as
     consumers are concerned, and its files are vacuum-swept.
 
-    The heavy work (the executor-parallel write) happens here; publish
-    is a pure metadata flip — so the audit window adds zero data-write
-    latency to the happy path."""
+    The heavy work (the executor-parallel write, plus Bloom entries
+    under the head's Bloom conf) happens here; publish is a pure
+    metadata flip — so the audit window adds zero data-write latency to
+    the happy path."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     p = _staged_path(table_dir, name)
     if os.path.exists(p):
         raise ValueError(f"staged batch {name!r} already exists — drop it first")
-    files = _write_data_files(df, table_dir)
-    stats = _file_stats(table_dir, files, stat_cols) if stat_cols else {}
+    files, stats, blooms = _land(
+        df, table_dir, stat_cols, _bloom_conf_of(_head(table_dir), df)
+    )
     os.makedirs(os.path.dirname(p), exist_ok=True)
     with open(p, "w") as f:
         json.dump(
             {"name": name, "mode": mode, "files": files, "stats": stats,
-             "schema": df.schema.json()},
+             "blooms": blooms, "schema": df.schema.json()},
             f,
         )
     return p
@@ -1044,9 +992,9 @@ def read_staged(
         st = json.load(f)
     files = list(st["files"])
     if st["mode"] == "append" and include_head:
-        head = _latest(table_dir)
+        head = _head(table_dir)
         if head is not None:
-            files = _load_manifest(table_dir, head)["files"] + files
+            files = head["files"] + files
     schema = T.StructType.fromJson(json.loads(st["schema"]))
     if not files:
         return spark.createDataFrame([], schema)
@@ -1061,7 +1009,9 @@ def publish_staged(
     """WAP step 3: atomically promote the staged batch into the version
     chain (same O_EXCL publish as commit — concurrent appends that
     landed since staging are preserved under append mode). The staged
-    marker is removed on success.
+    marker is removed on success. The publish applies the same append
+    schema guard as ``commit``: a staged append that drops or retypes a
+    column of the publish-time head raises ``ValueError``.
 
     Idempotent by default: the publish carries ``commit_key =
     "staged:<name>"`` unless overridden, so a crash between publish and
@@ -1084,18 +1034,10 @@ def publish_staged(
             f"batch name {name!r} was already published once — staged names "
             "must be unique per publish (or pass an explicit commit_key)"
         )
-
-    def files_fn(parent_m):
-        if st["mode"] == "append" and parent_m is not None:
-            stats = dict(parent_m.get("stats", {}))
-            stats.update(st.get("stats", {}))
-            # staged batches carry no blooms; parent files keep theirs
-            return parent_m["files"] + st["files"], stats, dict(
-                parent_m.get("blooms", {})
-            )
-        return list(st["files"]), dict(st.get("stats", {}))
-
-    v = _publish(table_dir, f"publish_{st['mode']}", st["schema"], files_fn, key)
+    landed = (st["files"], st.get("stats", {}), st.get("blooms", {}))
+    v = _publish_landed(
+        table_dir, st["mode"], f"publish_{st['mode']}", st["schema"], landed, key
+    )
     try:
         os.remove(p)
     except FileNotFoundError:

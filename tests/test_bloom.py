@@ -121,6 +121,21 @@ def test_bloom_sidecar_equivalence(spark, tmp_path):
     assert probe.collect()[0]["bloom_maybe"] is True
 
 
+def test_hashlib_positions_match_spark(spark):
+    """The driver-side twin places every key exactly where the Spark
+    expression does: empty, ASCII, multi-byte UTF-8 and integer keys
+    rendered as strings."""
+    keys = ["", "a", "hello world", "x" * 100, "méßage-ünïcode-𝕏", "-1", "42"]
+    df = _keys(spark, keys)
+    for m_bits in (1024, 1 << 16):
+        cols = [
+            F.expr(bloom._pos_expr("key", i, m_bits)).alias(f"p{i}")
+            for i in range(4)
+        ]
+        for key, row in zip(keys, df.select(*cols).collect()):
+            assert list(row) == [bloom._pos_py(key, i, m_bits) for i in range(4)]
+
+
 def test_validation(spark):
     with pytest.raises(ValueError):
         bloom.bloom_build(_keys(spark, ["a"]), "key", k=0)

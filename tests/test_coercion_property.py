@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 from datetime import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -35,6 +35,7 @@ _cell = st.one_of(
             "12abc", "0x1A", "1_000", "12.0.1", "--5", "+-3", "1 2",
             "2021-06-12", "2021-6-1", "12/06/2021", "20210612",
             "2021-06-12 08:30:00", "junk", "\xa012\xa0", "\t7\n",
+            "99999999999999999999",
         ]
     ),
     st.text(
@@ -46,10 +47,13 @@ _PY_DATE_FORMATS = ["%Y-%m-%d %H:%M:%S", "%Y-%m-%d", "%d/%m/%Y", "%Y%m%d"]
 
 
 def _py_int(cell: str):
+    # values outside the INT64 range cannot land in a BIGINT column:
+    # they are expected to be NULL, like any other unparseable cell
     try:
-        return int(cell)
+        v = int(cell)
     except Exception:
         return None
+    return v if -(2**63) <= v < 2**63 else None
 
 
 def _py_float(cell: str):
@@ -82,6 +86,7 @@ def _eq(a, b) -> bool:
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(cells=st.lists(_cell, min_size=1, max_size=60))
+@example(cells=["99999999999999999999", "-99999999999999999999", "-nan"])
 def test_int_float_parity_with_python(spark, cells):
     df = spark.createDataFrame([(c,) for c in cells], ["c"])
     got = df.select(

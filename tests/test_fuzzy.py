@@ -91,6 +91,14 @@ def test_max_dist_validation(spark):
 
     with pytest.raises(ValueError):
         deletion_variants(F.lit("x"), 3)
+    # the Arrow-kernel entry points must refuse too: a silent max_dist=3
+    # would return an incomplete pair set
+    df = spark.createDataFrame(NAMES, ["id", "name"])
+    for bad in (0, 3):
+        with pytest.raises(ValueError, match="max_dist"):
+            fuzzy_self_pairs(df, "id", "name", bad)
+        with pytest.raises(ValueError, match="max_dist"):
+            fuzzy_join(df, df, "id", "name", "id", "name", bad)
 
 
 def test_fuzzy_dedup_is_transitive(spark):

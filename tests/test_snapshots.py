@@ -288,38 +288,6 @@ def _planned_paths(out):
     return int(loc.group(1)) if loc else 0
 
 
-def test_python_xxh64_matches_spark(spark):
-    """The driver-side Bloom probe hash must be bit-identical to the
-    executor-side build hash (F.xxhash64) for longs and strings of every
-    length class (empty, <4, <8, <32, >=32 bytes, multi-block)."""
-    from pyspark.sql import functions as F
-
-    values = [
-        0,
-        1,
-        -1,
-        2**62,
-        -(2**62),
-        "",
-        "a",
-        "abc",
-        "abcdefg",
-        "hello world",
-        "x" * 31,
-        "y" * 32,
-        "z" * 100,
-        "méßage-ünïcode-𝕏",
-    ]
-    for seed in (0, 1, 7):
-        for v in values:
-            got = S._spark_xxhash64(v, seed)
-            lit = F.lit(v).cast("bigint") if isinstance(v, int) else F.lit(v)
-            want = spark.range(1).select(
-                F.xxhash64(lit, F.lit(seed).cast("bigint")).alias("h")
-            ).collect()[0]["h"]
-            assert got == want, (v, seed, got, want)
-
-
 def test_bloom_pruned_point_lookup(spark, tmp_path):
     """equals= skips files whose manifest Bloom excludes the value — the
     point-lookup tool for unordered columns where min/max can't help.
