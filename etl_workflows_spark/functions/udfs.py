@@ -8,7 +8,7 @@ first:
 2. ``@pandas_udf`` — Arrow-batched, vectorized, ~10-100× faster than
    row-at-a-time ``udf``; shown here,
 3. ``applyInPandas`` / ``mapInPandas`` for grouped/streamed shapes
-   (see operators/multimodal.py, sources/csv_source.py),
+   (see operators/multimodal.py),
 4. row-at-a-time ``F.udf`` — last resort only, never in a hot path.
 """
 

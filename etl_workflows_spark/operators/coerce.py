@@ -24,6 +24,18 @@ main.py:109-131) + the downstream load's parse, as one in-engine step:
       %d/%m/%Y           →  d/M/yyyy     (day-first!)
       %Y%m%d             →  yyyyMMdd
 
+  Each format is guarded by a digit-shape regex (``TIMESTAMP_SHAPES``),
+  for two reasons. Spark's single-letter fields are laxer than strptime:
+  they take any number of digits, so ``2021-006-12``, ``001/06/2021`` and
+  ``2021-06-12 008:30:00`` parse where strptime refuses them (1-2 digits
+  for %m/%d/%H/%M/%S, exactly 4 for %Y). And a failed parse is a thrown
+  and caught ``DateTimeParseException`` inside the JVM; the shape check
+  costs a fraction of that, and a cell that passes it almost always
+  parses. Shapes keep only layouts both parsers accept; strptime's
+  space-padded day (``2021-06- 5``), ``\\s+`` date/time separator and
+  6-7 digit compact dates (``2021612``) never parse in Spark, with or
+  without the guard.
+
 * STRING: identity — the reference has no STRING branch, empty string
   stays ``''`` (main.py:109-131, SURVEY.md T5/T6).
 
@@ -60,6 +72,16 @@ _FLOAT_RE = r"(?i)^[+-]?(([0-9]+(\.[0-9]*)?|\.[0-9]+)(e[+-]?[0-9]+)?|inf|infinit
 
 # Declared order matters: first matching format wins (main.py:123-129).
 TIMESTAMP_FORMATS = ["yyyy-M-d H:m:s", "yyyy-M-d", "d/M/yyyy", "yyyyMMdd"]
+# The digit layout each format's strptime twin accepts (less the layouts
+# Spark never parses, see above), in the same order; \z, not $: '$' also
+# matches before a trailing line terminator (NEL).
+_D12 = "[0-9]{1,2}"
+TIMESTAMP_SHAPES = [
+    rf"^[0-9]{{4}}-{_D12}-{_D12} {_D12}:{_D12}:{_D12}\z",
+    rf"^[0-9]{{4}}-{_D12}-{_D12}\z",
+    rf"^{_D12}/{_D12}/[0-9]{{4}}\z",
+    r"^[0-9]{8}\z",
+]
 
 
 def _stripped(c: Column) -> Column:
@@ -83,8 +105,14 @@ def safe_float(c: Column) -> Column:
 
 
 def safe_timestamp(c: Column) -> Column:
-    """First-match-wins multi-format parse; NULL when no format matches."""
-    return F.coalesce(*[F.try_to_timestamp(c, F.lit(fmt)) for fmt in TIMESTAMP_FORMATS])
+    """First-match-wins multi-format parse; NULL when no format matches.
+    A format is only tried on a cell of its shape."""
+    return F.coalesce(
+        *[
+            F.when(c.rlike(shape), F.try_to_timestamp(c, F.lit(fmt)))
+            for shape, fmt in zip(TIMESTAMP_SHAPES, TIMESTAMP_FORMATS)
+        ]
+    )
 
 
 def coercion_expr(c: Column, bq_type: str) -> Column:

@@ -135,7 +135,12 @@ def fuzzy_self_pairs(
 ) -> DataFrame:
     """All (id_a, id_b, dist) pairs with Levenshtein(str_a, str_b) <=
     ``max_dist``, id_a < id_b.  Exact — deletion-variant candidates are
-    complete, the levenshtein verify is the decision."""
+    complete, the levenshtein verify is the decision.
+
+    ``id_col`` MUST be a unique, non-NULL row key: the strings re-attach
+    to candidate id pairs by equi-join, so a repeated id multiplies rows
+    (``(1, "smith"), (2, "smyth"), (2, "smith")`` returns the pair (1, 2)
+    twice, at dist 1 and dist 0) and a NULL id never re-attaches."""
     # ID-ONLY candidate join (guide §2.3/§8: shuffle keys, not payloads;
     # the same recipe similarity.py's banded LSH keeps): both join sides
     # and the dropDuplicates exchange carry 16-byte id pairs instead of
@@ -190,7 +195,10 @@ def fuzzy_join(
 ) -> DataFrame:
     """Bipartite form: (left_id, right_id, dist) for every cross-side
     pair within ``max_dist`` — the record-linkage join (match a dirty
-    feed against a master table without a cross join)."""
+    feed against a master table without a cross join).
+
+    ``left_id`` and ``right_id`` MUST each be a unique, non-NULL key of
+    their side, for the reason ``fuzzy_self_pairs`` gives."""
     # id-only candidate join — see fuzzy_self_pairs for the shape note
     ka = _keyed(left, left_id, left_str, max_dist).select("id", "key")
     kb = _keyed(right, right_id, right_str, max_dist).select("id", "key")

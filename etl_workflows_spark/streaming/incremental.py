@@ -11,8 +11,8 @@ runs (the cron-friendly shape), and ``cleanSource=archive`` reproduces the
 reference's ARCHIVED/ convention without the crash window.
 
 The coercion path is byte-identical to batch ingestion: the same line
-reader + tokenizer + Catalyst coercion expressions run inside the stream
-(``mapInPandas`` and higher-order expressions are streaming-compatible).
+reader + tokenizer + coercion expressions, all plain Catalyst expressions,
+run inside the stream.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from etl_workflows_spark.schema.registry import load_schema_file
 from etl_workflows_spark.sources.csv_source import (
     LINE_SCHEMA,
     line_reader_options,
-    make_tokenizer,
+    tokenize_lines,
 )
 
 
@@ -62,11 +62,9 @@ def incremental_csv_load(
         )
     lines = reader.csv(source_dir)
 
-    # The SAME tokenizer object as batch ingestion — shared definition in
-    # sources/csv_source.make_tokenizer, so the dialects cannot drift.
-    tokenize, out_schema = make_tokenizer(n_fields)
-    raw = lines.mapInPandas(tokenize, schema=out_schema)
-    cleaned = coerce_columns(raw, schema_doc)
+    # The SAME tokenizer as batch ingestion — shared definition in
+    # sources/csv_source.tokenize_lines, so the dialects cannot drift.
+    cleaned = coerce_columns(tokenize_lines(lines, n_fields), schema_doc)
 
     # same name mapping + database bootstrap as every batch sink — a
     # reference-style 'project.dataset.table' fed straight to toTable

@@ -70,8 +70,15 @@ def spark(tmp_path_factory):
             # (measured 22 s for THREE rows). Cap leaf parallelism so
             # KB-sized fixtures behave like KB-sized data; real corpora
             # (parquet reads) are unaffected.
-            "spark.default.parallelism": "8",
-            "spark.sql.leafNodeDefaultParallelism": "8",
+            # A frame built from a Python list is a Python RDD of
+            # defaultParallelism slices, and every action over it runs one
+            # Python worker task per slice (~0.1-0.2 s each on a 4-core
+            # host, warm workers included); a pandas UDF over a leaf also
+            # runs one Python task per leaf partition. 2 slices and 4
+            # leaf partitions still exercise cross-partition code paths;
+            # 8 and 8 made test_scd.py + test_round8b_ops.py 3.7x slower.
+            "spark.default.parallelism": "2",
+            "spark.sql.leafNodeDefaultParallelism": "4",
         },
     )
     yield spark

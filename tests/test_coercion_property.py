@@ -10,8 +10,11 @@ batch at once, compare row-for-row.
 from __future__ import annotations
 
 import math
-from datetime import datetime
+import random
+import re
+from datetime import datetime, timedelta
 
+import pandas as pd
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -44,6 +47,11 @@ _cell = st.one_of(
 )
 
 _PY_DATE_FORMATS = ["%Y-%m-%d %H:%M:%S", "%Y-%m-%d", "%d/%m/%Y", "%Y%m%d"]
+
+
+def _cells_df(spark, cells: list[str]):
+    # from pandas: an Arrow-backed local relation, no Python worker per job
+    return spark.createDataFrame(pd.DataFrame({"c": cells}))
 
 
 def _py_int(cell: str):
@@ -88,7 +96,7 @@ def _eq(a, b) -> bool:
 @given(cells=st.lists(_cell, min_size=1, max_size=60))
 @example(cells=["99999999999999999999", "-99999999999999999999", "-nan"])
 def test_int_float_parity_with_python(spark, cells):
-    df = spark.createDataFrame([(c,) for c in cells], ["c"])
+    df = _cells_df(spark, cells)
     got = df.select(
         safe_int(F.col("c")).alias("i"), safe_float(F.col("c")).alias("f")
     ).collect()
@@ -131,12 +139,64 @@ def test_int_float_parity_with_python(spark, cells):
         max_size=40,
     )
 )
+# Spark's lax single-letter fields take 3+ digits where strptime does not
+@example(cells=["001/06/2021", "2021-006-12", "2021-06-12 008:30:00"])
+# unpadded and compact layouts strptime accepts keep parsing
+@example(cells=["2021-6-1 7:5:3", "1/6/2021", "20210612"])
 def test_timestamp_parity_with_strptime(spark, cells):
-    df = spark.createDataFrame([(c,) for c in cells], ["c"])
+    df = _cells_df(spark, cells)
     got = df.select(safe_timestamp(F.col("c")).alias("t")).collect()
     for cell, row in zip(cells, got):
         expected = _py_ts(cell)
         assert _eq(row["t"], expected), f"ts({cell!r}): {row['t']} != {expected}"
+
+
+def _gen_like_timestamps(seed: int) -> list[str]:
+    """Cells shaped like the benchmark export's TIMESTAMP column: all four
+    declared formats (some non-zero-padded) and the dirty spellings."""
+    rng = random.Random(seed)
+    out = ["", "?", "not a date", "2021/06/12", "12-06-2021", "yesterday"]
+    for _ in range(400):
+        t = datetime(2019, 1, 1) + timedelta(seconds=rng.randrange(3 * 365 * 86400))
+        kind = rng.randrange(4)
+        if kind == 0:
+            out.append(
+                f"{t.year}-{t.month}-{t.day} {t.hour}:{t.minute}:{t.second}"
+                if rng.random() < 0.3
+                else t.strftime("%Y-%m-%d %H:%M:%S")
+            )
+        else:
+            out.append(t.strftime(["%Y-%m-%d", "%d/%m/%Y", "%Y%m%d"][kind - 1]))
+    return out
+
+
+def _zero_padded(cell: str) -> list[str]:
+    """The cell with one extra leading zero on each numeric field in turn
+    (``2021-06-12`` → ``02021-06-12``, ``2021-006-12``, ``2021-06-012``)."""
+    runs = [m.span() for m in re.finditer("[0-9]+", cell)]
+    return [cell[:a] + "0" + cell[a:] for a, _ in runs]
+
+
+def test_shape_guard_only_moves_cells_to_strptime(spark):
+    """The guarded parse differs from the bare first-match parse only
+    where the guarded result is strptime's."""
+    clean = _gen_like_timestamps(7)
+    cells = clean + [p for c in clean[6:40] for p in _zero_padded(c)]
+    df = _cells_df(spark, cells)
+    bare = F.coalesce(
+        *[F.try_to_timestamp(F.col("c"), F.lit(f)) for f in TIMESTAMP_FORMATS]
+    )
+    got = df.select(
+        safe_timestamp(F.col("c")).alias("guarded"), bare.alias("bare")
+    ).collect()
+    moved = []
+    for cell, row in zip(cells, got):
+        if not _eq(row["guarded"], row["bare"]):
+            assert _eq(row["guarded"], _py_ts(cell)), cell
+            moved.append(cell)
+    # only zero-padded cells move, and the clean pool parses exactly
+    assert moved and not set(moved) & set(clean)
+    assert all(_eq(g["guarded"], _py_ts(c)) for c, g in zip(clean, got))
 
 
 def test_format_order_is_declared_order():
