@@ -14,8 +14,10 @@ Scale design (100 TB corpus, small benchmark):
   construction — benchmarks are MBs, corpora are TBs), so the check is a
   map-side hash-join over the corpus: one scan, zero shuffle of the
   training side; only the per-doc aggregation shuffles, keyed by doc id.
-* Everything is Catalyst expressions (split / transform / slice /
-  explode) — no Python UDFs.
+* Everything is Catalyst expressions with generated code (split /
+  regexp_extract_all / array_distinct / explode / xxhash64) — no Python
+  UDFs and no lambda: a higher-order function (``transform``) is a
+  ``CodegenFallback`` that Spark evaluates interpreted, row by row.
 
 Net-new vs the reference (SURVEY.md §2.7).
 """
@@ -31,28 +33,30 @@ def ngram_hash_set(
 ) -> DataFrame:
     """(id, gram_h) — one row per distinct n-gram per document, hashed.
 
-    n-gram windows come from n shifted slices zipped positionally (the
-    non-lambda construction — same measured codegen win as
-    text.repetition_signals' shingling); documents with fewer than ``n``
-    tokens are dropped (no well-defined overlap). Distinctness is
-    array-local (``array_distinct`` before the explode) — no shuffle.
+    Tokens are the fields of ``split(text, " ")`` (so a space run yields
+    empty tokens, and ``\\n``/``\\t`` are token characters). One
+    ``regexp_extract_all`` builds every window: the pattern matches, with
+    zero width, at each token start (the text start or just after a
+    space), and its lookahead captures that token plus the next n-1 —
+    the window ``concat_ws(" ", toks[i:i+n])`` without materializing the
+    token array or running a lambda. A document with fewer than ``n``
+    tokens (or NULL text) has no window, so it yields no row (no
+    well-defined overlap). Distinctness is array-local
+    (``array_distinct`` before the explode) — no shuffle.
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), toks.alias("__t")).filter(
-        F.size("__t") >= n
+    if n < 1:
+        # a window of n < 1 tokens is empty: decontamination would
+        # silently flag nothing
+        raise ValueError(f"n must be >= 1, got {n}")
+    # possessive runs: a token never gives characters back (the next one
+    # must start at a space), so a short tail fails without backtracking
+    windows = F.regexp_extract_all(
+        F.col(text_col),
+        F.lit(f"(?<![^ ])(?=([^ ]*+(?: [^ ]*+){{{n - 1}}}))"),
+        1,
     )
-    m = F.size("__t") - (n - 1)
-    z = F.arrays_zip(*[F.slice(F.col("__t"), j + 1, m) for j in range(n)])
-    grams = F.array_distinct(
-        F.transform(
-            z,
-            lambda s: F.concat_ws(
-                " ", *[s.getField(str(j)) for j in range(n)]
-            ),
-        )
-    )
-    return base.select(
-        F.col(id_col), F.explode(grams).alias("gram")
+    return df.select(
+        F.col(id_col), F.explode(F.array_distinct(windows)).alias("gram")
     ).select(id_col, F.xxhash64("gram").alias("gram_h"))
 
 
@@ -69,7 +73,7 @@ def contamination_report(
     Returns (id_col, n_grams, n_matched, overlap_ratio, contaminated) for
     every training doc with at least one n-gram. ``overlap_ratio`` is
     matched/total over the document's *distinct* grams; ``contaminated``
-    is ``overlap_ratio >= threshold``.
+    is ``overlap_ratio >= threshold``. ``n < 1`` raises ``ValueError``.
     """
     train_g = ngram_hash_set(train, id_col, text_col, n)
     bench_g = F.broadcast(
@@ -105,6 +109,8 @@ def decontaminate(
 
     Anti-joins the training set against the flagged ids — docs too short
     to form an n-gram are KEPT (they cannot be meaningfully matched).
+    ``n < 1`` raises ``ValueError`` (it would otherwise flag nothing and
+    silently keep every row).
     """
     flagged = contamination_report(
         train, benchmark, id_col, text_col, n, threshold

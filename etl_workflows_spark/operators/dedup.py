@@ -487,6 +487,11 @@ def _simhash_kernel_udf(bits: int):
     matrix. NULL/NaN text fingerprints as 0 (the expression's coalesce
     to an empty vote), '' keeps its single empty-string token — both
     pinned by tests against ``simhash_bits`` and by the DuckDB oracle.
+
+    Memory assumption: the memo is unbounded and lives for the task, so
+    it holds one entry per DISTINCT token of the partition — sized for
+    natural-language partitions (a vocabulary, not a corpus); a partition
+    of mostly unique tokens (hashes, ids) grows it toward its own size.
     """
     from typing import Iterator
 

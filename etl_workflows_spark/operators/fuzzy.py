@@ -97,7 +97,10 @@ def _keyed(df: DataFrame, id_col: str, str_col: str, max_dist: int) -> DataFrame
     # NULL s, whose NULL key could never match the downstream equi-join
     # anyway. ``deletion_variants`` stays the Column form for callers
     # that need an in-plan expression; test_fuzzy pins the kernel's
-    # variant sets against it.
+    # variant sets against it. Memory assumption: the memo is unbounded
+    # for the task's life — one variant list (~len²/2 strings at d=2)
+    # per DISTINCT string of the partition, sized for short, repetitive
+    # keys (names, titles), not for a partition of long unique strings.
     id_type = renamed.schema["id"].dataType
     schema = T.StructType(
         [

@@ -188,6 +188,61 @@ def repetition_signals(
     return out
 
 
+def _gate_rules(
+    t: Column,
+    min_tokens: int,
+    max_tokens: int,
+    token_len_range: tuple[float, float],
+    min_stop_ratio: float,
+    min_uniq_ratio: float,
+) -> list[tuple[str, Column]]:
+    """The quality gate's (rule name, ok) pairs, in evaluation order."""
+    n_tok = token_count(t)
+    n_tok_d = n_tok.cast("double")
+    mean_tok_len = (F.length(t) - (n_tok - F.lit(1))) / n_tok_d
+    return [
+        ("ok_n_tokens", (n_tok >= min_tokens) & (n_tok <= max_tokens)),
+        (
+            "ok_token_len",
+            (mean_tok_len >= token_len_range[0])
+            & (mean_tok_len <= token_len_range[1]),
+        ),
+        ("ok_stop_ratio", stopword_count(t) / n_tok_d >= min_stop_ratio),
+        ("ok_uniq_ratio", distinct_token_count(t) / n_tok_d >= min_uniq_ratio),
+    ]
+
+
+def _all_pass(rules: list[tuple[str, Column]]) -> Column:
+    passes = rules[0][1]
+    for _, ok in rules[1:]:
+        passes = passes & ok
+    return passes
+
+
+def quality_gate_passes(
+    text_col: str = "text",
+    min_tokens: int = 10,
+    max_tokens: int = 100_000,
+    token_len_range: tuple[float, float] = (2.0, 12.0),
+    min_stop_ratio: float = 0.01,
+    min_uniq_ratio: float = 0.2,
+) -> Column:
+    """``quality_gate``'s ``passes`` as a row-local predicate, for
+    filtering a corpus in place: ``docs.filter(quality_gate_passes())``
+    keeps exactly the rows whose ``quality_gate`` audit row passes, with
+    no join back on ``doc_id`` (and no ``doc_id`` needed)."""
+    return _all_pass(
+        _gate_rules(
+            F.col(text_col),
+            min_tokens,
+            max_tokens,
+            token_len_range,
+            min_stop_ratio,
+            min_uniq_ratio,
+        )
+    )
+
+
 def quality_gate(
     docs: DataFrame,
     text_col: str = "text",
@@ -207,32 +262,26 @@ def quality_gate(
     * ``ok_uniq_ratio`` — distinct-token fraction >= min_uniq_ratio
 
     All per-row IEEE arithmetic on integer counts — deterministic across
-    engines; single codegen stage, no shuffle.
+    engines; one map stage, no shuffle. Not all of it is generated code:
+    the stopword count's ``filter`` lambda is a ``CodegenFallback`` that
+    Spark evaluates interpreted inside the stage. The rules are shared
+    with ``quality_gate_passes`` (the in-place filter form).
     """
-    t = F.col(text_col)
-    n_tok = token_count(t)
-    n_tok_d = n_tok.cast("double")
-    mean_tok_len = (F.length(t) - (n_tok - F.lit(1))) / n_tok_d
-    rules = [
-        ("ok_n_tokens", (n_tok >= min_tokens) & (n_tok <= max_tokens)),
-        (
-            "ok_token_len",
-            (mean_tok_len >= token_len_range[0])
-            & (mean_tok_len <= token_len_range[1]),
-        ),
-        ("ok_stop_ratio", stopword_count(t) / n_tok_d >= min_stop_ratio),
-        ("ok_uniq_ratio", distinct_token_count(t) / n_tok_d >= min_uniq_ratio),
-    ]
+    rules = _gate_rules(
+        F.col(text_col),
+        min_tokens,
+        max_tokens,
+        token_len_range,
+        min_stop_ratio,
+        min_uniq_ratio,
+    )
     fail_reason = F.lit(None).cast("string")
     for name, ok in reversed(rules):
         fail_reason = F.when(~ok, F.lit(name)).otherwise(fail_reason)
-    passes = rules[0][1]
-    for _, ok in rules[1:]:
-        passes = passes & ok
     return docs.select(
         "doc_id",
         *[ok.alias(name) for name, ok in rules],
-        passes.alias("passes"),
+        _all_pass(rules).alias("passes"),
         fail_reason.alias("fail_reason"),
     )
 

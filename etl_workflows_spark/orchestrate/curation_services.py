@@ -17,7 +17,11 @@ Registry calls return status strings (the DSL's protocol — workflow.py);
 each step COMPOSES the lazy curation plan on a shared context, and the
 stage step performs the single materialization via the snapshot layer's
 write-audit-publish machinery, so the DAG adds no extra passes over the
-corpus: one write, then bounded-count audit reads.
+corpus: one write, then bounded-count audit reads. The quality gate
+filters the deduplicated rows in place (its rules are row-local), so the
+composed plan forks only twice: dedup's semi join against its own keeper
+aggregate, and decontamination's anti join against the flagged ids, whose
+n-gram report re-runs dedup + gate once on its side.
 
 Reference parity: same try/except + switch-on-description control flow as
 etl_cars.yaml:51-54 ("CSV file not found"); the curation stages are the
@@ -29,7 +33,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from etl_workflows_spark.exceptions import EngineError
 from etl_workflows_spark.operators import decontam, pii, text
@@ -144,12 +147,11 @@ def build_curation_registry(
         return "Success"
 
     def gate_quality(body: dict) -> str:
-        # quality_gate returns the audit relation (doc_id, ok_*, passes,
-        # fail_reason) — keep surviving rows via a semi join on doc_id
-        keep = text.quality_gate(ctx["df"], **(gate_kwargs or {})).filter(
-            F.col("passes")
-        ).select("doc_id")
-        ctx["df"] = ctx["df"].join(keep, "doc_id", "left_semi")
+        # the gate rules are row-local: filter in place (a semi join back
+        # on doc_id would re-run the whole upstream plan on its other side)
+        ctx["df"] = ctx["df"].filter(
+            text.quality_gate_passes(**(gate_kwargs or {}))
+        )
         return "Success"
 
     def decontaminate_corpus(body: dict) -> str:

@@ -2814,12 +2814,13 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source"
     )
     kept = dedup.drop_exact_duplicates(docs)
-    # materialize the gated corpus ONCE: DSIR consumes it three times
-    # (target bucket counts, corpus bucket counts, the grams explode) and
-    # each pass would otherwise re-run the dedup agg + gate join DAG
-    gated = kept.join(
-        text.quality_gate(kept).filter("passes").select("doc_id"), "doc_id"
-    ).localCheckpoint(eager=True, storageLevel=SCRATCH_LEVEL)
+    # the gate is row-local: filter in place. Materialize the gated corpus
+    # ONCE: DSIR consumes it three times (target bucket counts, corpus
+    # bucket counts, the grams explode) and each pass would otherwise
+    # re-run the dedup agg + semi join
+    gated = kept.filter(text.quality_gate_passes()).localCheckpoint(
+        eager=True, storageLevel=SCRATCH_LEVEL
+    )
     sel = dsir.dsir_select_within(gated, F.col("lang") == "en", budget=150)
     return sel.join(docs.select("doc_id", "lang", "source"), "doc_id").select(
         "doc_id", "weight_fp", "lang", "source"

@@ -85,7 +85,11 @@ def get_spark(
         # sys.path.insert would otherwise strand the workers
         # (ModuleNotFoundError at first UDF batch). The package's parent
         # dir rides the workers' PYTHONPATH; a pre-set PYTHONPATH is
-        # preserved after it.
+        # preserved after it. This assumes driver and executors share a
+        # filesystem layout (local[*], or identical images); a cluster
+        # that ships the package as an archive or wheel gets a first
+        # entry that is dead there, or that shadows the shipped copy
+        # with whatever sits at this path on the executor host.
         .config(
             "spark.executorEnv.PYTHONPATH",
             ":".join(

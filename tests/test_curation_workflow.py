@@ -5,6 +5,9 @@ batch fails the yield audit, takes the except branch, and vanishes."""
 
 from __future__ import annotations
 
+import re
+
+from etl_workflows_spark.orchestrate import curation_services
 from etl_workflows_spark.orchestrate.curation_services import (
     CURATION_WORKFLOW_YAML,
     build_curation_registry,
@@ -85,3 +88,34 @@ def test_collapsed_batch_rejected_even_on_nonempty_corpus(spark, tmp_path):
     p2 = _land(spark, tmp_path, "bad", bad)
     assert runner.run(params={"sourcePath": p2, "batch": "bad"}) == "rejected bad"
     assert S.read_snapshot(spark, corpus).count() == 4
+
+
+def test_composed_curation_plan_is_linear(spark, tmp_path, monkeypatch):
+    """The registry-composed plan (land → dedup → gate → decontaminate →
+    redact) forks only at dedup's keeper aggregate and decontamination's
+    flagged-id report: 4 scans of the landed corpus and 4 joins. A gate
+    that semi-joins its audit relation back on doc_id doubles both."""
+    corpus, reg = _registry(spark, tmp_path)
+    p = _land(spark, tmp_path, "landed", [(1, GOOD), (2, BENCH)])
+    composed = []
+    monkeypatch.setattr(
+        curation_services.S, "stage", lambda df, *a, **kw: composed.append(df)
+    )
+    reg["land_raw"]({"sourcePath": p})
+    for step in ("dedup_corpus", "gate_quality", "decontaminate_corpus",
+                 "redact_pii"):
+        reg[step]({})
+    reg["stage_curated"]({"batch": "b"})
+    # the scans' Location strings must name the full landed path
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    try:
+        plan = composed[0]._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert plan.count(p) <= 4, plan
+    joins = re.findall(
+        r"(?:SortMerge|BroadcastHash|ShuffledHash|BroadcastNestedLoop|Cartesian)"
+        r"(?:Join|Product)",
+        plan,
+    )
+    assert len(joins) <= 4, plan

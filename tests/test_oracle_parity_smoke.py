@@ -32,6 +32,9 @@ SMOKE = [
     "aqp_revenue_estimate",    # round-10: sampled-scan AQP
     "link_components_events",  # round-10: iterative CC vs recursive CTE
     "tfidf_top_terms",         # text stats
+    "decontaminate_overlap",   # regex n-gram windows
+    "pii_redaction",           # guarded PII scrub
+    "pipeline_curation_v3",    # dedup → in-place gate → DSIR
 ]
 
 

@@ -98,6 +98,20 @@ def test_contamination_short_docs_kept(spark):
     assert decontam.decontaminate(train, bench, n=5).count() == 1
 
 
+def test_contamination_rejects_n_below_one(spark):
+    import pytest as _pytest
+
+    bench = _docs(spark, [(100, "a b c d e")])
+    train = _docs(spark, [(1, "a b c d e")])
+    for n in (0, -1):
+        with _pytest.raises(ValueError, match="n must be >= 1"):
+            decontam.ngram_hash_set(train, n=n)
+        with _pytest.raises(ValueError, match="n must be >= 1"):
+            decontam.contamination_report(train, bench, n=n)
+        with _pytest.raises(ValueError, match="n must be >= 1"):
+            decontam.decontaminate(train, bench, n=n)
+
+
 # --- chunking --------------------------------------------------------------
 
 
